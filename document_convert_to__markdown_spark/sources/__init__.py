@@ -1,5 +1,12 @@
 """Table IO: Iceberg when a catalog is configured, parquet fallback;
-plus the Common Crawl artifact trio (WARC / WET / CDX)."""
+plus the container sources — the Common Crawl artifact trio (WARC /
+WET / CDX), archive bundles and Wikipedia dumps.
+
+The container readers (``warc``, ``archive``, ``wikidump``) share one
+layer, ``blobs``: the capped gzip/bz2/xz inflate loop, the
+bounded-frame ``mapInPandas`` exploder and the ``binaryFile``
+batch/stream reader.  Each reader only supplies its per-file row
+generator and schema."""
 
 from .cdx import read_cdx, read_cdx_stream  # noqa: F401
 from .tables import read_pages, read_pages_from_files, write_table

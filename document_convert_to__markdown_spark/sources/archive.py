@@ -16,20 +16,20 @@ directions of that contract:
   shards (the WebDataset layout training dataloaders consume),
   returning the shard manifest as a DataFrame.
 
-Scale shape: one archive = one ``binaryFile`` row = one task (same
-contract as `sources/warc.py:311` — the Common Crawl work-unit rule);
-member explosion runs inside an Arrow-batched ``mapInPandas``, so no
-shuffle stands between the file scan and extraction.  The packer is
-the mirror image: ``repartitionByRange`` on the sort key gives every
-task an ordered, disjoint url range, and each task packs its own rows
-into ``target_bytes``-bounded shards — no global cumulative sum, no
-single-partition window, shard count grows linearly with input and
-task parallelism is preserved at any scale (exactly how parquet
-writers bound file sizes).
+Scale shape: one archive = one ``binaryFile`` row = one task (the
+Common Crawl work-unit rule of the shared container-source layer,
+`sources/blobs.py`); member explosion runs inside an Arrow-batched
+``mapInPandas``, so no shuffle stands between the file scan and
+extraction.  The packer is the mirror image: ``repartitionByRange``
+on the sort key gives every task an ordered, disjoint url range, and
+each task packs its own rows into ``target_bytes``-bounded shards —
+no global cumulative sum, no single-partition window, shard count
+grows linearly with input and task parallelism is preserved at any
+scale (exactly how parquet writers bound file sizes).
 
 Safety rails mirror the WARC reader's (review r2 lineage):
 - per-archive decompression ceiling (``MAX_DECOMPRESSED_BYTES``)
-  stops gzip/deflate bombs;
+  stops gzip/bz2/xz bombs;
 - per-member size gate (``MAX_MEMBER_BYTES``, the engine's intended
   100 MB A2 rule) emits blob-free ``skipped_too_large`` rows —
   never a silent drop;
@@ -48,7 +48,8 @@ archives; this operator exists for the 100 TB ingest story.
 Format references (public): ZIP — PKWARE APPNOTE.TXT (the
 ``PK\\x03\\x04`` local header / ``PK\\x05\\x06`` end-of-central-dir
 structure, via stdlib ``zipfile``); tar — POSIX.1-1988/2001 ustar &
-PAX (via stdlib ``tarfile``); gzip — RFC 1952.
+PAX (via stdlib ``tarfile``); outer gzip/bz2/xz via
+``blobs.iter_inflated``.
 """
 
 from __future__ import annotations
@@ -68,17 +69,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Per-archive decompression ceiling (gzip-bomb rail; same rationale as
-# warc.MAX_DECOMPRESSED_BYTES — bundles are ~1 GB compressed at most).
-MAX_DECOMPRESSED_BYTES = 8 << 30
+from .blobs import (
+    COMPRESSED_MAGICS,
+    MAX_DECOMPRESSED_BYTES,
+    iter_inflated,
+    read_blobs,
+)
 
 # Per-member gate: the engine's intended A2 rule (100 MB), applied to
 # the *declared* member size before any bytes are inflated.
 MAX_MEMBER_BYTES = 100 * 1024 * 1024
 
-_GZ_MAGIC = b"\x1f\x8b"
-_BZ2_MAGIC = b"BZh"
-_XZ_MAGIC = b"\xfd7zXZ\x00"
 _ZIP_MAGICS = (b"PK\x03\x04", b"PK\x05\x06", b"PK\x07\x08")
 
 ARCHIVE_DOCS_SCHEMA = StructType([
@@ -153,85 +154,22 @@ def iter_archive_members(
     Detection nuance: for *uncompressed* tar, a silently-swallowed bad
     header (tarfile treats it as EOF) is caught by checking for
     non-NUL residue past the stop offset.  For ``.tar.gz`` the gzip
-    layer itself truncates at damage (the shared WARC bomb rail's
-    salvage), which tarfile then sees as a short read — surfacing as
+    layer itself truncates at damage (``iter_inflated``'s salvage),
+    which tarfile then sees as a short read — surfacing as
     ``failed_member`` or a salvage break; only block-aligned inner
     corruption that decompresses cleanly can pass undetected there.
     """
     try:
-        if blob[:2] == _GZ_MAGIC:
-            from .warc import _iter_decompressed_chunks
-
-            peek = _ChunkReader(_iter_decompressed_chunks(
-                blob, max_bytes=max_total_bytes))
+        if blob.startswith(COMPRESSED_MAGICS):
+            peek = _ChunkReader(iter_inflated(blob, max_total_bytes))
             yield from _iter_tar(peek, max_member_bytes, max_total_bytes)
-            return
-        if blob[:3] == _BZ2_MAGIC:
-            from .wikidump import _iter_bz2_chunks
-
-            peek = _ChunkReader(_iter_bz2_chunks(
-                blob, max_bytes=max_total_bytes))
-            yield from _iter_tar(peek, max_member_bytes, max_total_bytes)
-            return
-        if blob[:6] == _XZ_MAGIC:
-            peek = _ChunkReader(_iter_xz_chunks(
-                blob, max_bytes=max_total_bytes))
-            yield from _iter_tar(peek, max_member_bytes, max_total_bytes)
-            return
-        if blob[:4] in _ZIP_MAGICS:
+        elif blob[:4] in _ZIP_MAGICS:
             yield from _iter_zip(blob, max_member_bytes, max_total_bytes)
-            return
-        yield from _iter_tar(io.BytesIO(blob), max_member_bytes,
-                             max_total_bytes, raw=blob)
+        else:
+            yield from _iter_tar(io.BytesIO(blob), max_member_bytes,
+                                 max_total_bytes, raw=blob)
     except Exception as exc:                       # noqa: BLE001
         yield None, None, None, f"failed_archive:{type(exc).__name__}"
-
-
-def _iter_xz_chunks(data: bytes,
-                    max_bytes: int = MAX_DECOMPRESSED_BYTES):
-    """Capped streaming xz inflate (stdlib lzma), same rails as the
-    gzip/bz2 chunkers: bounded feed, output ceiling, corrupt-tail
-    salvage, multistream concatenation."""
-    import lzma
-
-    mv = memoryview(data)
-    n = len(data)
-    feed = 0
-    total = 0
-    d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
-    pending = None
-    try:
-        while True:
-            if pending is None:
-                if feed >= n:
-                    break
-                nxt = min(feed + _XZ_CHUNK, n)
-                pending = bytes(mv[feed:nxt])
-                feed = nxt
-            out = d.decompress(pending, max_length=_XZ_CHUNK)
-            pending = None
-            if out:
-                total += len(out)
-                if total > max_bytes:
-                    yield out[:len(out) - (total - max_bytes)]
-                    return
-                yield out
-            if d.eof:
-                rest = d.unused_data
-                d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
-                if rest:
-                    if rest[:6] != _XZ_MAGIC:
-                        return
-                    pending = rest
-                elif feed >= n:
-                    break
-            elif not d.needs_input:
-                pending = b""
-    except (lzma.LZMAError, EOFError, ValueError):
-        return                          # salvage prefix
-
-
-_XZ_CHUNK = 1 << 20
 
 
 def _iter_zip(blob: bytes, max_member_bytes: int, max_total_bytes: int):
@@ -324,30 +262,12 @@ def _iter_tar(fileobj, max_member_bytes: int, max_total_bytes: int,
         yield None, None, None, "failed_archive_tail"
 
 
-_ARCH_COLS = ["url", "archive", "member", "html", "size", "status"]
-# Flush the output batch once buffered payloads pass this bound — the
-# streaming rails upstream must not be defeated by collecting a whole
-# multi-GB archive's members into one pandas frame (round-5 review).
-_FLUSH_BYTES = 64 << 20
-
-
-def _explode_archive_blobs(batches):
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        pending = 0
-        for path, blob in zip(pdf["path"], pdf["content"]):
-            name = posixpath.basename(str(path))
-            for member, data, size, status in iter_archive_members(
-                    bytes(blob), name):
-                rows.append((_member_url(name, member),
-                             name, member, data, size, status))
-                pending += len(data) if data else 0
-                if pending >= _FLUSH_BYTES:
-                    yield pd.DataFrame(rows, columns=_ARCH_COLS)
-                    rows, pending = [], 0
-        yield pd.DataFrame(rows, columns=_ARCH_COLS)
+def _archive_rows(path, blob) -> Iterator[tuple]:
+    """``explode`` rows: one bundle file → ``ARCHIVE_DOCS_SCHEMA``
+    rows, one per member plus any archive-level status row."""
+    name = posixpath.basename(str(path))
+    for member, data, size, status in iter_archive_members(blob, name):
+        yield _member_url(name, member), name, member, data, size, status
 
 
 def read_archive_docs(spark, path_glob: str,
@@ -360,12 +280,8 @@ def read_archive_docs(spark, path_glob: str,
     archive contributes at least one row (status column tells which
     kind), preserving the engine's no-silent-drops invariant.
     """
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", path_glob_filter)
-             .load(path_glob)
-             .select("path", "content"))
-    return files.mapInPandas(_explode_archive_blobs,
-                             schema=ARCHIVE_DOCS_SCHEMA)
+    return read_blobs(spark, path_glob, path_glob_filter, _archive_rows,
+                      ARCHIVE_DOCS_SCHEMA, "html")
 
 
 def read_archive_docs_stream(spark, path_glob: str,
@@ -376,16 +292,9 @@ def read_archive_docs_stream(spark, path_glob: str,
     directory become micro-batches (the same continuous-arrival shape
     as ``read_warc_pages_stream`` — the stream checkpoint guarantees
     each archive is exploded exactly once)."""
-    from .warc import BINARY_FILE_SCHEMA
-
-    reader = (spark.readStream.format("binaryFile")
-              .schema(BINARY_FILE_SCHEMA)
-              .option("pathGlobFilter", path_glob_filter))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path_glob).select("path", "content")
-    return files.mapInPandas(_explode_archive_blobs,
-                             schema=ARCHIVE_DOCS_SCHEMA)
+    return read_blobs(spark, path_glob, path_glob_filter, _archive_rows,
+                      ARCHIVE_DOCS_SCHEMA, "html", stream=True,
+                      max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

@@ -9,8 +9,9 @@ the same dual-surface pattern as the WET source
 - **Reader**: one ``InputPartition`` per bundle file (zip / tar /
   tar.gz — the archive work unit; a corpus delivered as 10^5 bundles
   plans as 10^5 tasks, no shuffle), each exploded member-by-member by
-  the shared ``iter_archive_members`` kernel, so the mapInPandas path
-  and this one can never disagree on grammar or safety rails.
+  the per-file row generator ``read_archive_docs`` uses, under the
+  same ``ARCHIVE_DOCS_SCHEMA``, so the mapInPandas path and this one
+  can never disagree on grammar, safety rails or schema.
 - **Writer**: ``df.write.format("archive").mode(...).save(dir)``
   packs ``(url, html)`` rows into size-bounded tar shards through the
   Data Source API's two-phase commit: each task writes its own
@@ -47,8 +48,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-ARCHIVE_DDL_SCHEMA = ("url string, archive string, member string, "
-                      "html binary, size long, status string")
+from .archive import ARCHIVE_DOCS_SCHEMA, _archive_rows
 
 _BUNDLE_GLOBS = ("*.zip", "*.tar", "*.tar.gz", "*.tgz",
                  "*.tar.bz2", "*.tbz2", "*.tar.xz", "*.txz")
@@ -91,14 +91,8 @@ class ArchiveDataSourceReader(DataSourceReader):
     def read(self, partition: ArchivePartition):
         if not partition.path:
             return
-        from .archive import _member_url, iter_archive_members
-
-        name = os.path.basename(partition.path)
         with open(partition.path, "rb") as fh:
-            blob = fh.read()
-        for member, data, size, status in iter_archive_members(blob, name):
-            yield (_member_url(name, member), name, member, data, size,
-                   status)
+            yield from _archive_rows(partition.path, fh.read())
 
 
 @dataclass
@@ -327,8 +321,8 @@ class ArchiveDataSource(DataSource):
     def name(cls) -> str:
         return "archive"
 
-    def schema(self) -> str:
-        return ARCHIVE_DDL_SCHEMA
+    def schema(self):
+        return ARCHIVE_DOCS_SCHEMA
 
     def reader(self, schema) -> ArchiveDataSourceReader:
         return ArchiveDataSourceReader(self.options)

@@ -4,21 +4,17 @@ The natural 100 TB ingest path for this engine is Common Crawl, whose
 unit of storage is the ~1 GB gzipped WARC file.  This module provides
 
 - a from-scratch, dependency-free WARC record parser (``iter_records``)
-  for plain or gzip-compressed archives (including the per-record-member
-  gzip framing Common Crawl uses — Python's ``gzip`` transparently
-  concatenates members);
+  for plain or gzip/bz2/xz-compressed archives (including the
+  per-record-member gzip framing Common Crawl uses);
 - ``read_warc_pages(spark, path_glob)``: a Spark reader that turns a
   directory of WARC files into the standard pages relation
   (url, warc_ts, html, text, lang) ready for ``run_extraction``;
 - ``write_warc`` (driver-side, test fixture use) to serialize pages
   rows back into a valid WARC file.
 
-Scale shape: one WARC file = one ``binaryFile`` row = one task —
-exactly the Common Crawl contract (files are sized ~1 GB so a task is
-a good work unit; a 100 TB crawl is ~100k files → ~100k tasks).  The
-record explosion runs in ``mapInPandas`` (Arrow-batched, one file per
-batch row), so record parsing streams inside the executor without a
-shuffle; the output feeds the extraction repartition directly.
+Scale shape: one WARC file = one ``binaryFile`` row = one task, the
+Common Crawl work unit; inflate, record explosion and frame bounds are
+the shared container-source layer (``sources/blobs.py``).
 
 Format reference: ISO 28500 / the public WARC 1.0 specification
 (warc-specifications.iipc.org) — record framing is
@@ -32,6 +28,22 @@ import io
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Iterator, Optional
+
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from ..pipeline.schemas import PAGES_SCHEMA
+from .blobs import (
+    CHUNK,
+    COMPRESSED_MAGICS,
+    explode,
+    iter_inflated,
+    read_blobs,
+)
 
 CRLF = b"\r\n"
 
@@ -55,95 +67,10 @@ def _parse_headers(block: bytes) -> dict:
     return headers
 
 
-# Decompression ceiling per archive: Common Crawl WARCs are ~1 GB
-# compressed / ~4-5 GB raw.  A crafted gzip bomb would otherwise expand
-# without bound inside the executor (review r2).
-MAX_DECOMPRESSED_BYTES = 8 << 30
-
-# Streaming granularity: decompressed bytes are produced and consumed in
-# chunks of this size so the full raw archive (~4-5 GB for a real CC
-# file) is never materialized in one task (VERDICT r2 next-round #7).
-_CHUNK = 1 << 20
-
 # A WARC header block larger than this is not a header block; stop
 # buffering rather than accumulate the whole archive looking for the
 # terminating blank line.
 _MAX_HEADER_BYTES = 1 << 20
-
-
-def _iter_decompressed_chunks(data: bytes,
-                              max_bytes: int = MAX_DECOMPRESSED_BYTES,
-                              ) -> Iterator[bytes]:
-    """Stream a (possibly multi-member) gzip archive as ~1 MB chunks.
-
-    Salvage semantics: a truncated or corrupt member ends iteration,
-    keeping everything decoded before it (crawl segments do arrive cut
-    off, and one bad tail must not lose the records before it).  Total
-    output is capped at ``max_bytes`` (a gzip bomb must not OOM the
-    executor).  Input is fed through a ``memoryview`` in bounded slices
-    so neither the compressed tail nor the decompressed archive is ever
-    copied wholesale — per-member ``data[pos:]`` copies would be
-    quadratic on Common Crawl's one-member-per-record framing.
-    """
-    import zlib
-
-    mv = memoryview(data)
-    total, feed, n = 0, 0, len(data)
-    # Input sliced past the previous member's end is carried into the
-    # next member instead of being re-sliced from ``mv``: on Common
-    # Crawl's one-member-per-record framing, re-feeding from the source
-    # would copy each byte ~(_CHUNK / member size) times (review r3).
-    # With the carry, every input byte is sliced exactly once.
-    carry = b""
-    while True:
-        if len(carry) < 2 and feed < n:
-            take = 2 - len(carry)
-            carry += bytes(mv[feed:feed + take])
-            feed += take
-        if len(carry) < 2 or carry[:2] != b"\x1f\x8b":
-            return  # no further member (or trailing garbage)
-        d = zlib.decompressobj(wbits=31)
-        try:
-            while not d.eof:
-                if d.unconsumed_tail:
-                    src = d.unconsumed_tail
-                elif carry:
-                    src, carry = carry, b""
-                elif feed < n:
-                    nxt = min(feed + _CHUNK, n)
-                    src = mv[feed:nxt]
-                    feed = nxt
-                else:
-                    return  # truncated final member: keep what streamed
-                chunk = d.decompress(src, _CHUNK)
-                if chunk:
-                    if total + len(chunk) >= max_bytes:
-                        yield chunk[:max_bytes - total]
-                        return  # ceiling hit: drop the rest
-                    total += len(chunk)
-                    yield chunk
-        except zlib.error:
-            return  # corrupt member: keep what already streamed
-        # Capture the leftover input BEFORE flush(): flush() shuffles
-        # unconsumed_tail into unused_data again, and at eof the two
-        # alias the same bytes — reading after flush doubles the carry
-        # at every member boundary (exponential blowup on multi-member
-        # archives).
-        carry = d.unused_data  # leftover input starts the next member
-        tail = d.flush()
-        if tail:
-            yield tail[:max_bytes - total]
-            total += len(tail)
-            if total >= max_bytes:
-                return
-
-
-def _decompress_salvage(data: bytes,
-                        max_bytes: int = MAX_DECOMPRESSED_BYTES) -> bytes:
-    """Materialized form of ``_iter_decompressed_chunks`` (tests /
-    small-archive callers).  Production parsing goes through the chunk
-    stream and never builds this string."""
-    return b"".join(_iter_decompressed_chunks(data, max_bytes))
 
 
 def _iter_records_from_chunks(chunks) -> Iterator[WarcRecord]:
@@ -213,23 +140,23 @@ def _iter_records_from_chunks(chunks) -> Iterator[WarcRecord]:
 
 
 def iter_records(data: bytes) -> Iterator[WarcRecord]:
-    """Yield records from raw WARC bytes (gzip'd or plain).
+    """Yield records from raw WARC bytes (compressed or plain).
 
-    Streaming: gzip members are inflated in ~1 MB chunks and records
-    framed incrementally, so peak memory is O(one record), not O(raw
-    archive) — a real CC file is ~1 GB compressed / ~4-5 GB raw and the
-    compressed blob already sits in the task, so the raw form must not
-    join it (VERDICT r2 #7).
+    Streaming: members are inflated in ~1 MB chunks (``iter_inflated``)
+    and records framed incrementally, so peak memory is O(one record),
+    not O(raw archive) — a real CC file is ~1 GB compressed / ~4-5 GB
+    raw and the compressed blob already sits in the task, so the raw
+    form must not join it (VERDICT r2 #7).
     """
-    if data[:2] == b"\x1f\x8b":
-        chunks: Iterator[bytes] = _iter_decompressed_chunks(data)
+    if data.startswith(COMPRESSED_MAGICS):
+        chunks: Iterator[bytes] = iter_inflated(data)
     else:
         # Slice plain archives too: feeding the whole blob as one chunk
         # would make the framing buffer O(archive), and its per-record
         # `del buf[:need]` compaction quadratic (review r3).
         mv = memoryview(data)
-        chunks = (bytes(mv[i:i + _CHUNK])
-                  for i in range(0, len(data), _CHUNK))
+        chunks = (bytes(mv[i:i + CHUNK])
+                  for i in range(0, len(data), CHUNK))
     yield from _iter_records_from_chunks(chunks)
 
 
@@ -258,54 +185,12 @@ def responses_from_warc(data: bytes) -> Iterator[tuple]:
                http_response_body(rec.payload))
 
 
-# Frame-emission bounds for _explode_warc_blobs: flush accumulated
-# records once either trips, so peak executor memory per task is
-# O(frame) + O(one in-flight record), independent of archive size.
-_FRAME_MAX_ROWS = 2000
-_FRAME_MAX_BYTES = 64 << 20
-
-
-def _explode_warc_blobs(batches):
-    """mapInPandas kernel: (content) file-blob rows → pages rows.
-
-    Yields frames incrementally — at most ``_FRAME_MAX_ROWS`` rows /
-    ``_FRAME_MAX_BYTES`` of body bytes per frame — while
-    ``iter_records`` streams the archive in ~1 MB inflate chunks, so a
-    real ~1 GB-compressed / ~4-5 GB-raw Common Crawl file costs one
-    compressed blob + one bounded frame of memory, never the raw
-    archive (review r2 bounded it per-file; VERDICT r2 #7 bounds it
-    per-frame).  ``text``/``lang`` are None — they are oracle columns
-    the synthetic corpus carries, not crawl data."""
-    import pandas as pd
-
-    def frame(urls, tss, bodies):
-        return pd.DataFrame({
-            "url": urls,
-            "warc_ts": tss,
-            "html": bodies,
-            "text": [None] * len(urls),
-            "lang": [None] * len(urls),
-        })
-
-    for pdf in batches:
-        for blob in pdf["content"]:
-            urls, tss, bodies, nbytes = [], [], [], 0
-            for url, ts, body in responses_from_warc(bytes(blob)):
-                urls.append(url)
-                tss.append(ts)
-                bodies.append(body)
-                nbytes += len(body)
-                if (len(urls) >= _FRAME_MAX_ROWS
-                        or nbytes >= _FRAME_MAX_BYTES):
-                    yield frame(urls, tss, bodies)
-                    urls, tss, bodies, nbytes = [], [], [], 0
-            yield frame(urls, tss, bodies)
-
-
-# binaryFile's fixed schema — needed explicitly for the streaming
-# reader (file-stream sources cannot infer).
-BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
-                      "length long, content binary")
+def _warc_rows(path, blob) -> Iterator[tuple]:
+    """``explode`` rows: one WARC file → pages rows.  ``text``/``lang``
+    are None — they are oracle columns the synthetic corpus carries,
+    not crawl data."""
+    for url, ts, body in responses_from_warc(blob):
+        yield url, ts, body, None, None
 
 
 def read_warc_pages(spark, path_glob: str):
@@ -314,13 +199,8 @@ def read_warc_pages(spark, path_glob: str):
     ``binaryFile`` gives (path, content) rows; each file's records are
     exploded by an Arrow-batched ``mapInPandas``.
     """
-    from ..pipeline.schemas import PAGES_SCHEMA
-
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.warc*")
-             .load(path_glob)
-             .select("content"))
-    return files.mapInPandas(_explode_warc_blobs, schema=PAGES_SCHEMA)
+    return read_blobs(spark, path_glob, "*.warc*", _warc_rows,
+                      PAGES_SCHEMA, "html")
 
 
 def read_warc_pages_stream(spark, path_glob: str,
@@ -329,15 +209,9 @@ def read_warc_pages_stream(spark, path_glob: str,
     the directory become micro-batches (the continuous-crawl ingest
     shape — each Common Crawl segment shows up as a file, the stream
     checkpoint guarantees each is extracted exactly once)."""
-    from ..pipeline.schemas import PAGES_SCHEMA
-
-    reader = (spark.readStream.format("binaryFile")
-              .schema(BINARY_FILE_SCHEMA)
-              .option("pathGlobFilter", "*.warc*"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path_glob).select("content")
-    return files.mapInPandas(_explode_warc_blobs, schema=PAGES_SCHEMA)
+    return read_blobs(spark, path_glob, "*.warc*", _warc_rows,
+                      PAGES_SCHEMA, "html", stream=True,
+                      max_files_per_trigger=max_files_per_trigger)
 
 
 def write_warc_members(rows, fh: io.BufferedIOBase,
@@ -398,33 +272,18 @@ def fetch_warc_by_index(spark, captures, warc_root: str):
     """
     import os
 
-    from ..pipeline.schemas import PAGES_SCHEMA
-
-    def _fetch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            urls, tss, bodies = [], [], []
-            for fn, off, ln in zip(pdf["filename"], pdf["offset"],
-                                   pdf["length"]):
-                with open(os.path.join(warc_root, str(fn)), "rb") as fh:
-                    fh.seek(int(off))
-                    raw = fh.read(int(ln))
-                for rec in iter_records(raw):
-                    if rec.rec_type == "response" and rec.target_uri:
-                        urls.append(rec.target_uri)
-                        tss.append(_parse_warc_date(rec.date))
-                        bodies.append(http_response_body(rec.payload))
-            yield pd.DataFrame({
-                "url": urls, "warc_ts": tss, "html": bodies,
-                "text": [None] * len(urls), "lang": [None] * len(urls),
-            })
+    def fetch_rows(fn, off, ln):
+        with open(os.path.join(warc_root, str(fn)), "rb") as fh:
+            fh.seek(int(off))
+            raw = fh.read(int(ln))
+        return _warc_rows(fn, raw)
 
     cols = captures.select("filename", "offset", "length")
     n_files = max(1, min(64, cols.select("filename").distinct().count()))
     ordered = (cols.repartition(n_files, "filename")
                .sortWithinPartitions("filename", "offset"))
-    return ordered.mapInPandas(_fetch, schema=PAGES_SCHEMA)
+    return ordered.mapInPandas(explode(fetch_rows, PAGES_SCHEMA, "html"),
+                               schema=PAGES_SCHEMA)
 
 
 def texts_from_wet(data: bytes) -> Iterator[tuple]:
@@ -443,31 +302,15 @@ def texts_from_wet(data: bytes) -> Iterator[tuple]:
                rec.payload.decode("utf-8", "replace"))
 
 
-def _explode_wet_blobs(batches):
-    """mapInPandas kernel: WET file blobs → (url, warc_ts, text) rows.
+WET_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("warc_ts", TimestampType()),
+    StructField("text", StringType()),
+])
 
-    Same frame-emission bounds as ``_explode_warc_blobs`` (flush at
-    ``_FRAME_MAX_ROWS`` rows / ``_FRAME_MAX_BYTES`` text bytes), so a
-    multi-GB-raw WET file costs one bounded frame of executor memory.
-    """
-    import pandas as pd
 
-    def frame(urls, tss, texts):
-        return pd.DataFrame({"url": urls, "warc_ts": tss, "text": texts})
-
-    for pdf in batches:
-        for blob in pdf["content"]:
-            urls, tss, texts, nbytes = [], [], [], 0
-            for url, ts, text in texts_from_wet(bytes(blob)):
-                urls.append(url)
-                tss.append(ts)
-                texts.append(text)
-                nbytes += len(text)
-                if (len(urls) >= _FRAME_MAX_ROWS
-                        or nbytes >= _FRAME_MAX_BYTES):
-                    yield frame(urls, tss, texts)
-                    urls, tss, texts, nbytes = [], [], [], 0
-            yield frame(urls, tss, texts)
+def _wet_rows(path, blob) -> Iterator[tuple]:
+    return texts_from_wet(blob)
 
 
 def read_wet_pages(spark, path_glob: str):
@@ -477,18 +320,8 @@ def read_wet_pages(spark, path_glob: str):
     entirely and read ~1/5 the bytes).  Scale shape is identical to
     ``read_warc_pages``: one file = one ``binaryFile`` row = one task.
     """
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("text", T.StringType()),
-    ])
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.wet*")
-             .load(path_glob)
-             .select("content"))
-    return files.mapInPandas(_explode_wet_blobs, schema=schema)
+    return read_blobs(spark, path_glob, "*.wet*", _wet_rows, WET_SCHEMA,
+                      "text")
 
 
 def read_wet_pages_stream(spark, path_glob: str,
@@ -497,20 +330,9 @@ def read_wet_pages_stream(spark, path_glob: str,
     ``read_warc_pages_stream``): new WET segments arriving in the
     directory become micro-batches, checkpoint-guaranteed
     exactly-once per file."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("text", T.StringType()),
-    ])
-    reader = (spark.readStream.format("binaryFile")
-              .schema(BINARY_FILE_SCHEMA)
-              .option("pathGlobFilter", "*.wet*"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path_glob).select("content")
-    return files.mapInPandas(_explode_wet_blobs, schema=schema)
+    return read_blobs(spark, path_glob, "*.wet*", _wet_rows, WET_SCHEMA,
+                      "text", stream=True,
+                      max_files_per_trigger=max_files_per_trigger)
 
 
 def write_wet(rows, fh: io.BufferedIOBase, compress: bool = False,

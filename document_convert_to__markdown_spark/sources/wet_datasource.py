@@ -26,8 +26,9 @@ each file blob through the JVM scan into one Arrow batch stream —
 preferable when the downstream is more pandas UDF work.  This
 DataSource keeps the whole scan in the Python worker and hands Spark
 Arrow batches directly; its rows enter the plan as a normal scan node
-(column pruning applies).  Both paths share one parser, and the
-round-trip test pins them row-identical.
+(column pruning applies).  Both paths share one parser and one
+schema (``warc.WET_SCHEMA``), and the round-trip test pins them
+row-identical.
 
 Sandbox note: files are opened with ``open()`` (local paths / the
 ``file:`` scheme).  On a real cluster against an object store the
@@ -46,7 +47,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-WET_DDL_SCHEMA = "url string, warc_ts timestamp, text string"
+from .warc import WET_SCHEMA, texts_from_wet
 
 
 class WetFilePartition(InputPartition):
@@ -75,14 +76,11 @@ class WetDataSourceReader(DataSourceReader):
     def read(self, partition: WetFilePartition):
         if not partition.path:
             return
-        from .warc import texts_from_wet
-
         with open(partition.path, "rb") as fh:
             data = fh.read()
         # texts_from_wet streams records out of the (possibly gzipped)
         # archive in bounded chunks; yield per record.
-        for url, ts, text in texts_from_wet(data):
-            yield (url, ts, text)
+        yield from texts_from_wet(data)
 
 
 class WetDataSource(DataSource):
@@ -92,8 +90,8 @@ class WetDataSource(DataSource):
     def name(cls) -> str:
         return "wet"
 
-    def schema(self) -> str:
-        return WET_DDL_SCHEMA
+    def schema(self):
+        return WET_SCHEMA
 
     def reader(self, schema) -> WetDataSourceReader:
         return WetDataSourceReader(self.options)

@@ -13,9 +13,10 @@ this module mirrors the engine's WARC/CDX design point for point:
 - ``read_wikidump_pages(spark, glob)``: full-scan ingest — one dump
   file = one ``binaryFile`` row = one task (enwiki ships as one ~20 GB
   file or per-range parts; parts are the parallel unit), pages
-  exploded by an Arrow-batched ``mapInPandas`` running a streaming
-  bz2 decode (bounded chunks, decompression ceiling) + incremental
-  ``<page>`` scan — the raw ~90 GB XML never materializes.
+  exploded by the shared container-source layer (``sources/blobs.py``:
+  capped streaming inflate, bounded ``mapInPandas`` frames) + an
+  incremental ``<page>`` scan — the raw ~90 GB XML never
+  materializes.
 - ``read_multistream_index(spark, path)``: the index as a relation —
   ``spark.read.text`` (Hadoop inflates ``.bz2`` transparently) +
   ``split(limit 3)`` — all JVM-side, malformed lines surface as
@@ -57,6 +58,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .blobs import iter_inflated, read_blobs
+
 # Ceiling on decompressed bytes per dump-file task (a crafted bz2 bomb
 # must cost the file, not the executor) — enwiki's full XML is ~90 GB
 # but arrives as many independent streams; the per-task unit is a part
@@ -68,10 +71,6 @@ MAX_DECOMPRESSED_BYTES = 32 << 30
 # read at most this much past the stream offset).
 MAX_STREAM_BYTES = 64 << 20
 
-_CHUNK = 1 << 20
-
-_BZ2_MAGIC = b"BZh"
-
 WIKI_PAGES_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("title", StringType(), True),
@@ -82,54 +81,6 @@ WIKI_PAGES_SCHEMA = StructType([
     StructField("text", StringType(), True),
     StructField("status", StringType(), False),
 ])
-
-
-def _iter_bz2_chunks(data: bytes,
-                     max_bytes: int = MAX_DECOMPRESSED_BYTES,
-                     ) -> Iterator[bytes]:
-    """Stream a (possibly multistream) bz2 blob as bounded chunks.
-
-    Salvage semantics: a truncated or corrupt stream ends iteration,
-    keeping everything decoded before it; total output is capped at
-    ``max_bytes``.  Input is fed in bounded slices via ``memoryview``
-    so neither side is ever copied wholesale (the same rails as the
-    WARC gzip chunker, `sources/warc.py:74`).
-    """
-    mv = memoryview(data)
-    n = len(data)
-    feed = 0
-    total = 0
-    d = bz2.BZ2Decompressor()
-    pending: Optional[bytes] = None
-    try:
-        while True:
-            if pending is None:
-                if feed >= n:
-                    break
-                nxt = min(feed + _CHUNK, n)
-                pending = bytes(mv[feed:nxt])
-                feed = nxt
-            out = d.decompress(pending, max_length=_CHUNK)
-            pending = None
-            if out:
-                total += len(out)
-                if total > max_bytes:
-                    yield out[:len(out) - (total - max_bytes)]
-                    return
-                yield out
-            if d.eof:
-                rest = d.unused_data
-                d = bz2.BZ2Decompressor()
-                if rest:
-                    if rest[:3] != _BZ2_MAGIC:
-                        return          # trailing garbage: stop cleanly
-                    pending = rest
-                elif feed >= n:
-                    break
-            elif not d.needs_input:
-                pending = b""           # more output buffered inside
-    except (OSError, EOFError, ValueError):
-        return                          # salvage prefix
 
 
 def _parse_page(fragment: bytes) -> Optional[tuple]:
@@ -216,43 +167,32 @@ def _wiki_url(title: Optional[str]) -> str:
     return "wiki://" + (title or "\x00page").replace(" ", "_")
 
 
-_COLS = ["url", "title", "ns", "page_id", "redirect", "ts", "text",
-         "status"]
-# Flush the output batch once buffered page text passes this bound:
-# the streaming decode exists so the raw XML never materializes — the
-# OUTPUT stage must honor the same rail (round-5 review finding).
-_FLUSH_BYTES = 64 << 20
+_COLS = WIKI_PAGES_SCHEMA.fieldNames()
 
 
-def _explode_dump_blobs(batches):
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        pending = 0
-        for blob in pdf["content"]:
-            n_seen = 0
-            for t, ns, pid, red, ts, text, status in iter_dump_pages(
-                    _iter_bz2_chunks(bytes(blob))):
-                rows.append((_wiki_url(t), t, ns, pid, red, ts, text,
-                             status))
-                n_seen += 1
-                pending += len(text) if text else 0
-                if pending >= _FLUSH_BYTES:
-                    yield pd.DataFrame(rows, columns=_COLS)
-                    rows, pending = [], 0
-            if n_seen == 0:
-                # a dump file with zero pages is queryable, not silent
-                rows.append((_wiki_url(None), None, None, None, None,
-                             None, "skipped_empty_dump"))
-        yield pd.DataFrame(rows, columns=_COLS)
+def _dump_rows(path, blob) -> Iterator[tuple]:
+    """``explode`` rows: one dump file → page rows, plus a
+    ``skipped_empty_dump`` row for a file with zero pages (queryable,
+    not silent)."""
+    n_seen = 0
+    for t, ns, pid, red, ts, text, status in iter_dump_pages(
+            iter_inflated(blob, MAX_DECOMPRESSED_BYTES)):
+        n_seen += 1
+        yield _wiki_url(t), t, ns, pid, red, ts, text, status
+    if n_seen == 0:
+        yield (_wiki_url(None), None, None, None, None, None, None,
+               "skipped_empty_dump")
 
 
 def read_wikidump_pages(spark, path_glob: str,
                         namespaces: Optional[tuple] = (0,)):
     """Directory/glob of multistream dump files → pages relation.
 
-    One dump file = one task; ``namespaces`` filters post-parse
+    Only ``*.xml*.bz2`` files are read: whole dumps (``...xml.bz2``)
+    and per-range parts (``...multistream1.xml-p1p41242.bz2``), but not
+    the ``-index.txt.bz2`` / ``-index1.txt-p1p41242.bz2`` that ships
+    beside each one.  One dump file = one task; ``namespaces`` filters
+    post-parse
     (``None`` keeps all — talk/user/template pages included).  Status
     rows (``failed_page`` / ``skipped_empty_dump``) always survive
     the namespace filter, and so do ok pages whose ``<ns>`` is absent
@@ -260,12 +200,8 @@ def read_wikidump_pages(spark, path_glob: str,
     a silent drop (round-5 review finding): accounting rows are not
     filterable by accident.
     """
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.bz2")
-             .load(path_glob)
-             .select("content"))
-    pages = files.mapInPandas(_explode_dump_blobs,
-                              schema=WIKI_PAGES_SCHEMA)
+    pages = read_blobs(spark, path_glob, "*.xml*.bz2", _dump_rows,
+                       WIKI_PAGES_SCHEMA, "text")
     if namespaces is not None:
         pages = pages.filter(
             F.col("ns").isin(list(namespaces))
@@ -320,45 +256,16 @@ def fetch_pages_by_index(spark, wanted, dump_path: str,
                 for offset, ids in sorted(grouped.items()):
                     fh.seek(int(offset))
                     blob = fh.read(max_stream_bytes)
-                    d = bz2.BZ2Decompressor()
-
-                    def one_stream(blob=blob, d=d,
-                                   cap=MAX_DECOMPRESSED_BYTES):
-                        # same bomb rail + feed pattern as the
-                        # full-scan chunker: a crafted stream must
-                        # cost the fetch, not the executor (round-5
-                        # review finding); stops at the stream's own
-                        # end marker (d.eof)
-                        pos = 0
-                        total = 0
-                        pending = None
-                        while not d.eof:
-                            if pending is None:
-                                if pos >= len(blob):
-                                    break
-                                pending = blob[pos:pos + _CHUNK]
-                                pos += _CHUNK
-                            out = d.decompress(pending,
-                                               max_length=_CHUNK)
-                            pending = None
-                            if out:
-                                total += len(out)
-                                if total > cap:
-                                    return
-                                yield out
-                            if not d.eof and not d.needs_input:
-                                pending = b""
-
                     missing = set(ids)
-                    try:
-                        for t, ns, pid, red, ts, text, status in \
-                                iter_dump_pages(one_stream()):
-                            if pid in ids:
-                                missing.discard(pid)
-                                rows.append((_wiki_url(t), t, ns, pid,
-                                             red, ts, text, status))
-                    except OSError:
-                        pass
+                    # the stream's own end marker bounds the inflate
+                    for t, ns, pid, red, ts, text, status in \
+                            iter_dump_pages(iter_inflated(
+                                blob, MAX_DECOMPRESSED_BYTES,
+                                first_only=True)):
+                        if pid in ids:
+                            missing.discard(pid)
+                            rows.append((_wiki_url(t), t, ns, pid,
+                                         red, ts, text, status))
                     # a wanted page the stream failed to produce is
                     # accounted, never silently absent (round-5
                     # review finding)

@@ -8,7 +8,7 @@ identical to the driver-side source; (b) 1,000 wanted pages
 point-fetched through the index — per-stream seek + bounded read,
 row-identical to the same subset of the full scan; (c) the
 wikitext → markdown converter over every article, with a
-structural output check (no template/table/ref residue).
+structural output check (no template/table/ref/link residue).
 
 Usage: python scripts/soak_wikidump.py [n_pages]   (default 100000)
 Prints one JSON line.  Run serialized (no concurrent Spark jobs).
@@ -95,7 +95,8 @@ def main() -> None:
         md = pages.select(conv(F.col("text")).alias("md"))
         bad_md = md.filter(
             F.col("md").contains("{{") | F.col("md").contains("{|")
-            | F.col("md").contains("<ref") | (F.length("md") < 100)
+            | F.col("md").contains("<ref") | F.col("md").contains("[[")
+            | (F.length("md") < 100)
         ).count()
         conv_sec = time.time() - t2
 

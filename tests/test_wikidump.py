@@ -2,14 +2,17 @@
 wikitext → markdown converter (extractors/wikitext.py)."""
 
 import bz2
+import random
 
 import pytest
 
 from document_convert_to__markdown_spark.extractors.wikitext import (
     wikitext_to_markdown,
 )
+from document_convert_to__markdown_spark.sources import blobs
+from document_convert_to__markdown_spark.sources.blobs import iter_inflated
 from document_convert_to__markdown_spark.sources.wikidump import (
-    _iter_bz2_chunks,
+    _page_xml,
     build_wikidump,
     fetch_pages_by_index,
     iter_dump_pages,
@@ -28,7 +31,7 @@ ROWS.append(("Redir", 0, 501, "2020-01-02T03:04:05Z",
 class TestPureParse:
     def test_build_parse_roundtrip(self):
         dump, index = build_wikidump(ROWS, pages_per_stream=2)
-        pages = list(iter_dump_pages(_iter_bz2_chunks(dump)))
+        pages = list(iter_dump_pages(iter_inflated(dump)))
         assert len(pages) == len(ROWS)
         by_title = {p[0]: p for p in pages}
         assert by_title["Doc 3"][5] == ROWS[3][4]
@@ -43,8 +46,8 @@ class TestPureParse:
 
     def test_truncated_dump_salvages_prefix(self):
         dump, _ = build_wikidump(ROWS, pages_per_stream=2)
-        sal = list(iter_dump_pages(_iter_bz2_chunks(dump[:len(dump)
-                                                         * 2 // 3])))
+        sal = list(iter_dump_pages(iter_inflated(dump[:len(dump)
+                                                      * 2 // 3])))
         assert 0 < len(sal) < len(ROWS)
         assert all(p[6] == "ok" for p in sal)
 
@@ -52,15 +55,42 @@ class TestPureParse:
         dump, _ = build_wikidump(ROWS[:4], pages_per_stream=2)
         step = max(1, len(dump) // 80)
         for cut in range(0, len(dump), step):
-            list(iter_dump_pages(_iter_bz2_chunks(dump[:cut])))
+            list(iter_dump_pages(iter_inflated(dump[:cut])))
 
     def test_bomb_ceiling(self):
         big = bz2.compress(b"<x>" + b"\x00" * (1 << 20) + b"</x>")
-        out = b"".join(_iter_bz2_chunks(big, max_bytes=1000))
+        out = b"".join(iter_inflated(big, max_bytes=1000))
         assert len(out) == 1000
 
     def test_non_bz2_yields_nothing(self):
-        assert list(_iter_bz2_chunks(b"\xff" * 512)) == []
+        assert list(iter_inflated(b"\xff" * 512)) == []
+
+
+def _dump_with_page_stream_at(offset: int) -> bytes:
+    """One-page bz2 streams for pages 1..7, page 2's starting exactly
+    at ``offset``: a big incompressible page 1, then two comment-only
+    filler streams whose compressed sizes close the gap to the byte."""
+    ts = "2020-01-02T03:04:05Z"
+    rng = random.Random(7)
+    letters = bytes(97 + b % 26 for b in rng.randbytes(2 * offset))
+
+    def big(n):
+        return bz2.compress(_page_xml("Big", 0, 1, ts, letters[:n].decode()))
+
+    # one linear calibration lands page 1's stream ~1500 bytes short
+    first = big(offset * (offset - 1500) // len(big(offset)))
+    fillers = {}
+    for k in range(1500):
+        fillers.setdefault(
+            len(bz2.compress(b"<!-- " + letters[:k] + b" -->")), k)
+    gap = offset - len(first)
+    a = next(a for a in fillers if gap - a in fillers)
+    pad = [bz2.compress(b"<!-- " + letters[:fillers[size]] + b" -->")
+           for size in (a, gap - a)]
+    rest = [bz2.compress(_page_xml(f"P{i}", 0, i, ts, f"page {i}"))
+            for i in range(2, 8)]
+    assert len(first) + len(pad[0]) + len(pad[1]) == offset
+    return b"".join([first, *pad, *rest])
 
 
 class TestSparkDump:
@@ -81,6 +111,36 @@ class TestSparkDump:
         assert rows["Doc 5"]["text"] == ROWS[5][4]
         assert rows["Redir"]["redirect"] == "Doc 0"
         assert rows["Doc 5"]["url"] == "wiki://Doc_5"
+
+    def test_directory_read_skips_the_index_file(self, spark, dump_dir):
+        # the -index.txt.bz2 beside the dump is not a dump: reading the
+        # directory must not decode it into a skipped_empty_dump row
+        rows = read_wikidump_pages(spark, str(dump_dir),
+                                   namespaces=None).collect()
+        assert len(rows) == len(ROWS)
+        assert all(r["status"] == "ok" for r in rows)
+
+    def test_directory_read_keeps_per_range_parts(self, spark, tmp_path):
+        # Wikimedia's per-range part naming: the dump part is read, its
+        # index part is not
+        dump, index = build_wikidump(ROWS, pages_per_stream=2)
+        (tmp_path / "enwiki-multistream1.xml-p1p7.bz2").write_bytes(dump)
+        (tmp_path / "enwiki-multistream-index1.txt-p1p7.bz2").write_bytes(
+            bz2.compress(index.encode()))
+        rows = read_wikidump_pages(spark, str(tmp_path),
+                                   namespaces=None).collect()
+        assert len(rows) == len(ROWS)
+        assert all(r["status"] == "ok" for r in rows)
+
+    def test_stream_magic_straddling_a_feed_slice(self, spark, tmp_path):
+        # page 2's stream starts one byte before a feed-slice boundary,
+        # so its "BZh" magic is cut across two slices; every page from
+        # there on must still come back
+        dump = _dump_with_page_stream_at(blobs.CHUNK - 1)
+        (tmp_path / "cut-multistream.xml.bz2").write_bytes(dump)
+        got = read_wikidump_pages(spark, str(tmp_path)).collect()
+        assert sorted(r["page_id"] for r in got) == list(range(1, 8))
+        assert all(r["status"] == "ok" for r in got)
 
     def test_read_pages_all_namespaces(self, spark, dump_dir):
         df = read_wikidump_pages(
@@ -136,6 +196,15 @@ class TestWikitext:
     def test_unclosed_template_truncates_not_leaks(self):
         md = wikitext_to_markdown("keep {{unclosed | junk " * 1)
         assert md.strip() == "keep"
+
+    def test_self_closing_ref_with_slash_keeps_prose(self):
+        md = wikitext_to_markdown(
+            'A<ref name="x/y"/> keep this. B<ref>cite</ref> end')
+        assert md == "A keep this. B end\n"
+
+    def test_link_nested_in_label_leaves_no_residue(self):
+        assert wikitext_to_markdown("[[A|x [[B]] y]]") == "x B y\n"
+        assert wikitext_to_markdown("[[A|x [[B|b]] y]]") == "x b y\n"
 
     def test_total_on_junk(self):
         import random
