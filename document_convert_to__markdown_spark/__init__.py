@@ -23,3 +23,13 @@ Spark).
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+if "pyspark.worker" in _sys.modules:
+    # Inside a PySpark Python worker: stop the per-task zip re-read
+    # (worker_hook.py).  Every kernel reaches this when its worker
+    # unpickles it.
+    from . import worker_hook as _worker_hook
+
+    _worker_hook.install()

@@ -11,9 +11,15 @@ A23).  Control flow:
 
 Scale design (SURVEY §4.2, north rule):
 - **url-hash repartition**: deterministic, even keying; P ≈ 2-4 × cores.
-- **salted giant-doc routing**: AQE fixes shuffle skew, not compute skew
+- **giant-doc routing**: AQE fixes shuffle skew, not compute skew
   inside one UDF call — documents above ``giant_threshold`` bytes are
-  split off and round-robin repartitioned so no worker gets two giants.
+  split off into their own round-robin branch of ``partitions // 16``
+  tasks (at least one), which is unioned *first*, so giant tasks launch
+  in the first wave instead of ending the stage.  This does not give
+  each giant its own task: below 32 partitions (under 11 cores at the
+  default P) the branch is one task that holds every giant, and
+  round-robin can put giants from different map tasks into the same
+  slot (exact placement is ROADMAP direction 5).
 - **per-partition lineage**: each task appends one metrics trailer row
   (partition id, counts, bytes, elapsed) — the ledger that makes runs
   resumable and auditable without driver-side accumulators.
@@ -66,13 +72,20 @@ def _drop_stale_temporary(spark: SparkSession, target: str) -> None:
         fs.delete(tmp, True)
 
 
-@pandas_udf(StringType())
-def _doc_name_udf(urls: pd.Series) -> pd.Series:
+def _doc_names(urls: pd.Series) -> pd.Series:
     """url → doc name (same normalization chain the extractor uses),
     for status rows whose blobs never cross to Python."""
     from ..extractors.normalize import doc_name_from_url
 
     return urls.map(doc_name_from_url)
+
+
+def _doc_name_udf():
+    """A new doc-name UDF for each plan.  A UDF object caches its Java
+    side, bound to the SparkContext of its first use; after a session
+    restart every task of its stage fails to update that context's
+    accumulator."""
+    return pandas_udf(_doc_names, StringType())
 
 
 def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -175,7 +188,7 @@ def run_extraction(
         .select(
             F.lit("doc").alias("kind"),
             "url",
-            _doc_name_udf("url").alias("doc_name"),
+            _doc_name_udf()("url").alias("doc_name"),
             F.lit("unknown").alias("format"),
             F.lit("skipped_too_large").alias("status"),
             F.lit(None).cast("string").alias("error"),
@@ -203,18 +216,21 @@ def run_extraction(
     )
     giant = (
         sized.filter(F.col("_len") >= giant_threshold)
-        # Salted routing: round-robin spreads giants one-per-task; a
-        # url-hash here could co-locate two giants on one worker.  Giants
-        # are ~1/10⁴ of rows (FIXTURES.md), so this branch gets a small
-        # fraction of the task count — a full `partitions` here would
-        # spawn that many near-empty Python workers per run.
+        # Round-robin, not url-hash, so the branch's tasks share the
+        # giants by count (not one giant per task: module docstring).
+        # Giants are ~1/10⁴ of rows (FIXTURES.md), so this branch gets a
+        # small fraction of the task count — a full `partitions` here
+        # would spawn that many near-empty Python workers per run.
         .repartition(max(1, partitions // 16))
         .drop("_len")
     )
 
     raw = normal.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
     raw_giant = giant.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    raw = raw.unionByName(raw_giant).unionByName(oversize)
+    # Giant branch first: a union numbers its partitions child by child
+    # and tasks launch in partition order, so the longest tasks start in
+    # the first wave instead of ending the stage as its last straggler.
+    raw = raw_giant.unionByName(raw).unionByName(oversize)
 
     docs = raw.filter(F.col("kind") == "doc")
     results = docs.select(*RESULT_COLUMNS)

@@ -103,7 +103,7 @@ def stream_extract_df(
         sized.filter(F.col("_len") > F.lit(max_bytes))
         .select(
             "url",
-            _doc_name_udf("url").alias("doc_name"),
+            _doc_name_udf()("url").alias("doc_name"),
             F.lit("unknown").alias("format"),
             F.lit("skipped_too_large").alias("status"),
             F.lit(None).cast("string").alias("error"),
