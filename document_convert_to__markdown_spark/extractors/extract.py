@@ -103,6 +103,15 @@ def _fail(url: str, doc_name: str, fmt: str, err: Exception) -> ExtractedDocumen
     )
 
 
+def too_large(url: str) -> ExtractedDocument:
+    """The status row of a document over the size gate; its payload is
+    never read, so a caller may gate on a length and drop the blob."""
+    return ExtractedDocument(
+        url, doc_name_from_url(url), sniffer.FMT_UNKNOWN, STATUS_TOO_LARGE,
+        None, None, 0, "none", []
+    )
+
+
 def extract_document(url: str, payload: Optional[bytes]) -> ExtractedDocument:
     doc_name = doc_name_from_url(url)
 
@@ -112,10 +121,7 @@ def extract_document(url: str, payload: Optional[bytes]) -> ExtractedDocument:
             None, None, 0, "none", []
         )
     if len(payload) > MAX_DOCUMENT_BYTES:
-        return ExtractedDocument(
-            url, doc_name, sniffer.FMT_UNKNOWN, STATUS_TOO_LARGE,
-            None, None, 0, "none", []
-        )
+        return too_large(url)
 
     fmt = sniff_format(payload)
 

@@ -27,8 +27,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
+
+from .udf import per_call_pandas_udf
 
 # MinHash parameters: 64 permutations, 8 bands × 8 rows.
 N_PERM = 64
@@ -57,7 +58,7 @@ def _shingle_hashes(text: str, k: int = 3) -> np.ndarray:
 
 # DataType objects (not DDL strings): DDL parsing needs a live
 # SparkContext, which doesn't exist when executors re-import this module.
-@pandas_udf(ArrayType(LongType()))
+@per_call_pandas_udf(ArrayType(LongType()))
 def minhash_signature(texts: pd.Series) -> pd.Series:
     """64-permutation MinHash signature per text (vectorized batch)."""
     sigs = []
@@ -69,7 +70,7 @@ def minhash_signature(texts: pd.Series) -> pd.Series:
     return pd.Series(sigs)
 
 
-@pandas_udf(LongType())
+@per_call_pandas_udf(LongType())
 def simhash64(texts: pd.Series) -> pd.Series:
     """64-bit SimHash over word tokens (md5-derived bit vectors)."""
     shifts = np.arange(64, dtype=np.uint64)

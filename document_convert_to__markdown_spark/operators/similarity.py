@@ -26,6 +26,7 @@ from pyspark.sql.types import IntegerType
 
 from ..functions.vector import cosine_similarity, dot, l2_norm
 from .quantize import round_half_away
+from .udf import per_call_pandas_udf
 
 _DIM = 64
 # 6 planes → 64 buckets: sized so sandbox-scale corpora (~10²-10⁵ vectors)
@@ -181,7 +182,7 @@ def neardup_pairs_cosine(embeddings: DataFrame, threshold: float = 0.8,
     )
 
 
-@pandas_udf(IntegerType())
+@per_call_pandas_udf(IntegerType())
 def _lsh_bucket(embs: pd.Series) -> pd.Series:
     """Random-hyperplane sign bucket (16-bit) per embedding — Arrow batch."""
     mat = np.vstack(embs.to_numpy())
@@ -198,7 +199,7 @@ _centroids = np.random.RandomState(11).standard_normal((_N_CENTROIDS, _DIM))
 _centroids /= np.linalg.norm(_centroids, axis=1, keepdims=True)
 
 
-@pandas_udf(IntegerType())
+@per_call_pandas_udf(IntegerType())
 def _ivf_cell(embs: pd.Series) -> pd.Series:
     """Nearest-centroid cell id per embedding (cosine argmax, Arrow batch)."""
     mat = np.vstack(embs.to_numpy()).astype(np.float64)

@@ -14,8 +14,9 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StringType
+
+from .udf import per_call_pandas_udf
 
 # Shared stopword probes per language (tiny n-gram heuristic — the goal
 # is deterministic cross-engine language ID, not linguistic accuracy).
@@ -264,7 +265,7 @@ def winnow_text(text: str, k: int = 8, w: int = 16) -> list[int]:
     return [int(v) for v in mins[keep]]
 
 
-@pandas_udf(ArrayType(LongType()))
+@per_call_pandas_udf(ArrayType(LongType()))
 def winnow_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: winnow_text(t or ""))
 
@@ -289,7 +290,7 @@ def winnow_fingerprints(documents: DataFrame, k: int = 8, w: int = 16
     )
 
 
-@pandas_udf(StringType())
+@per_call_pandas_udf(StringType())
 def cleanup_markdown_udf(texts: pd.Series) -> pd.Series:
     """A16 cleanup chain as an Arrow-vectorized column transform."""
     from ..extractors.cleanup import clean_markdown_content

@@ -3,23 +3,29 @@ lineage-checkpointed, resumable.
 
 This is the Spark replacement for the reference's sequential batch loop
 (/root/reference/main.py:126-170, converter.py:713-734 — SURVEY.md §2
-A23).  Control flow:
+A23).  Control flow — one scan, one exchange, one Python stage:
 
-    pages ─ filter(size gate) ─ route(normal | giant) ─ repartition
-          ─ mapInPandas(extract) ─ raw(kind: doc|metrics)
+    pages ─ size gate (null html above max_bytes) ─ slot(giant | url-hash)
+          ─ repartitionById ─ mapInPandas(extract) ─ raw(kind: doc|metrics)
           ─ results / assets / ledger
 
 Scale design (SURVEY §4.2, north rule):
 - **url-hash repartition**: deterministic, even keying; P ≈ 2-4 × cores.
+  Normal rows take partition ``slots + pmod(hash(url), P)``, which is
+  ``repartition(P, "url")``'s own placement shifted past the giant slots.
 - **giant-doc routing**: AQE fixes shuffle skew, not compute skew
-  inside one UDF call — documents above ``giant_threshold`` bytes are
-  split off into their own round-robin branch of ``partitions // 16``
-  tasks (at least one), which is unioned *first*, so giant tasks launch
-  in the first wave instead of ending the stage.  This does not give
-  each giant its own task: below 32 partitions (under 11 cores at the
-  default P) the branch is one task that holds every giant, and
-  round-robin can put giants from different map tasks into the same
-  slot (exact placement is ROADMAP direction 5).
+  inside one UDF call — documents of ``giant_threshold`` bytes or more
+  go to the first ``slots = defaultParallelism`` partitions (one launch
+  wave), keyed by the input split they were read from.  They hold the
+  lowest ids, and tasks launch in id order, so giants start in the first
+  wave instead of ending the stage as its last straggler, and giants
+  from different splits land in different tasks.  Known limit: giants
+  read from the *same* split share a slot (rare at ~1 giant per 10⁴
+  docs; cost-aware placement is ROADMAP direction 5).  An empty slot
+  still costs one Python task.
+- **size gate**: rows above ``max_bytes`` ride the same exchange with
+  ``html`` nulled; the kernel emits their skipped_too_large status row
+  from the url and length alone.
 - **per-partition lineage**: each task appends one metrics trailer row
   (partition id, counts, bytes, elapsed) — the ledger that makes runs
   resumable and auditable without driver-side accumulators.
@@ -40,13 +46,15 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
-from ..extractors.extract import MAX_DOCUMENT_BYTES, extract_document
+from ..extractors.extract import (
+    MAX_DOCUMENT_BYTES,
+    extract_document,
+    too_large,
+)
 from .schemas import EXTRACT_SCHEMA, LEDGER_COLUMNS, RESULT_COLUMNS
 
-# Documents larger than this route through the low-density giant path.
+# Documents of this size or more take a giant slot (module docstring).
 DEFAULT_GIANT_THRESHOLD = 4 * 1024 * 1024  # 4 MB
 
 
@@ -72,38 +80,26 @@ def _drop_stale_temporary(spark: SparkSession, target: str) -> None:
         fs.delete(tmp, True)
 
 
-def _doc_names(urls: pd.Series) -> pd.Series:
-    """url → doc name (same normalization chain the extractor uses),
-    for status rows whose blobs never cross to Python."""
-    from ..extractors.normalize import doc_name_from_url
-
-    return urls.map(doc_name_from_url)
-
-
-def _doc_name_udf():
-    """A new doc-name UDF for each plan.  A UDF object caches its Java
-    side, bound to the SparkContext of its first use; after a session
-    restart every task of its stage fails to update that context's
-    accumulator."""
-    return pandas_udf(_doc_names, StringType())
-
-
 def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: doc rows per batch + one metrics trailer row."""
+    """mapInPandas body over ``_size_gated`` rows: doc rows per batch +
+    one metrics trailer row."""
     from pyspark import TaskContext
 
     m_docs = m_ok = m_failed = m_skipped = m_bytes = 0
     t_part0 = time.perf_counter()
 
-    def doc_row(url: str, payload) -> dict:
+    def doc_row(url: str, payload, size: int) -> dict:
         nonlocal m_docs, m_ok, m_failed, m_skipped, m_bytes
         t0 = time.perf_counter()
-        payload_bytes = bytes(payload) if payload is not None else None
-        doc = extract_document(url, payload_bytes)
+        if payload is None and size:
+            doc = too_large(url)  # blob nulled at the size gate
+        else:
+            doc = extract_document(url, None if payload is None
+                                   else bytes(payload))
+            m_bytes += size
         elapsed_us = int((time.perf_counter() - t0) * 1e6)
 
         m_docs += 1
-        m_bytes += len(payload_bytes) if payload_bytes else 0
         if doc.status == "ok":
             m_ok += 1
         elif doc.status == "failed":
@@ -125,7 +121,7 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             "n_images": doc.n_images,
             "extractor_used": doc.extractor_used,
             "elapsed_us": elapsed_us,
-            "input_bytes": len(payload_bytes) if payload_bytes else 0,
+            "input_bytes": int(size),
             "assets": [
                 {"name": a.name, "page": a.page, "data": a.data}
                 for a in doc.assets
@@ -136,7 +132,8 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         }
 
     for pdf in batches:
-        rows = [doc_row(u, p) for u, p in zip(pdf["url"], pdf["html"])]
+        rows = [doc_row(u, p, n) for u, p, n
+                in zip(pdf["url"], pdf["html"], pdf["input_bytes"])]
         if rows:
             yield pd.DataFrame(rows)
 
@@ -155,6 +152,17 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     }])
 
 
+def _size_gated(pages: DataFrame, max_bytes: int) -> DataFrame:
+    """``url, html, input_bytes`` with ``html`` nulled above ``max_bytes``
+    (A2: the intended 100 MB gate).  The blob never crosses a shuffle or
+    reaches Python, but the row does, and ``_extract_partition`` turns it
+    into a skipped_too_large status row (A3: no row is dropped silently).
+    """
+    size = F.coalesce(F.length("html"), F.lit(0))
+    return pages.select("url", F.when(size <= max_bytes, F.col("html"))
+                        .alias("html"), size.alias("input_bytes"))
+
+
 @dataclass
 class ExtractResult:
     """The three output tables (SURVEY §2 Part B "Sinks")."""
@@ -171,66 +179,25 @@ def run_extraction(
     max_bytes: int = MAX_DOCUMENT_BYTES,
 ) -> ExtractResult:
     """Build the extraction plan over a pages DataFrame (lazy)."""
-    spark = pages.sparkSession
+    slots = pages.sparkSession.sparkContext.defaultParallelism
     if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism * 3, 8)
+        partitions = max(slots * 3, 8)
 
-    sized = pages.select("url", "html").withColumn(
-        "_len", F.coalesce(F.length("html"), F.lit(0))
-    )
-
-    # Intended 100MB gate at the scan (A2) — oversized blobs never cross
-    # to Python, but the row is NOT dropped: it becomes a
-    # skipped_too_large status row (A3: no row is dropped silently).
-    # Only the url string reaches the Python worker for name derivation.
-    oversize = (
-        sized.filter(F.col("_len") > F.lit(max_bytes))
-        .select(
-            F.lit("doc").alias("kind"),
-            "url",
-            _doc_name_udf()("url").alias("doc_name"),
-            F.lit("unknown").alias("format"),
-            F.lit("skipped_too_large").alias("status"),
-            F.lit(None).cast("string").alias("error"),
-            F.lit(None).cast("string").alias("markdown"),
-            F.lit(None).cast("string").alias("md_sha256"),
-            F.lit(0).alias("n_images"),
-            F.lit("none").alias("extractor_used"),
-            F.lit(0).cast("long").alias("elapsed_us"),
-            F.col("_len").cast("long").alias("input_bytes"),
-            F.lit(None).cast(EXTRACT_SCHEMA["assets"].dataType).alias("assets"),
-            F.lit(None).cast("int").alias("partition_id"),
-            *[F.lit(None).cast("long").alias(c)
-              for c in ("m_docs", "m_ok", "m_failed", "m_skipped",
-                        "m_bytes", "m_elapsed_us")],
-        )
-    )
-    sized = sized.filter(F.col("_len") <= F.lit(max_bytes))
-
-    normal = (
-        sized.filter(F.col("_len") < giant_threshold)
-        # Explicit url-hash repartition (north rule): deterministic even
-        # keying; repartition by expression hash-partitions on url.
-        .repartition(partitions, F.col("url"))
-        .drop("_len")
-    )
-    giant = (
-        sized.filter(F.col("_len") >= giant_threshold)
-        # Round-robin, not url-hash, so the branch's tasks share the
-        # giants by count (not one giant per task: module docstring).
-        # Giants are ~1/10⁴ of rows (FIXTURES.md), so this branch gets a
-        # small fraction of the task count — a full `partitions` here
-        # would spawn that many near-empty Python workers per run.
-        .repartition(max(1, partitions // 16))
-        .drop("_len")
-    )
-
-    raw = normal.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    raw_giant = giant.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    # Giant branch first: a union numbers its partitions child by child
-    # and tasks launch in partition order, so the longest tasks start in
-    # the first wave instead of ending the stage as its last straggler.
-    raw = raw_giant.unionByName(raw).unionByName(oversize)
+    gated = _size_gated(pages, max_bytes)
+    size = F.col("input_bytes")
+    # Ids [0, slots): giants, by input split, so they launch in the first
+    # wave.  Ids slots + [0, partitions): HashPartitioning's own placement
+    # (Murmur3 of url, pmod), i.e. exactly repartition(partitions, "url").
+    # spark_partition_id() is the map task's split, evaluated before the
+    # exchange, so a retried map task routes its rows the same way.
+    slot = (F.when((size >= giant_threshold) & (size <= max_bytes),
+                   F.pmod(F.spark_partition_id(), F.lit(slots)))
+            .otherwise(F.lit(slots)
+                       + F.pmod(F.hash("url"), F.lit(partitions))))
+    raw = (gated.withColumn("_slot", slot)
+           .repartitionById(slots + partitions, "_slot")
+           .drop("_slot")
+           .mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA))
 
     docs = raw.filter(F.col("kind") == "doc")
     results = docs.select(*RESULT_COLUMNS)
@@ -328,9 +295,10 @@ def run_extraction_resumable(
     todo = pages
     if resume and table_exists(results_path):
         done = read_table(results_path).select("url")
-        # Broadcast-friendly when the remainder is small; at scale the
-        # anti join shuffles on url — same key as the extract
-        # repartition, so the exchange is reused.
+        # Broadcast-friendly when the remainder is small.  At scale the
+        # anti join shuffles both sides on url (shuffle.partitions), and
+        # the extract exchange then shuffles the remaining pages again:
+        # no exchange is reused, so their blobs cross two shuffles.
         todo = pages.join(done, "url", "left_anti")
 
     plan = run_extraction(todo, partitions=partitions,

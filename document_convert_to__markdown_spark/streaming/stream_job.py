@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extractors.extract import MAX_DOCUMENT_BYTES
-from ..pipeline.job import _doc_name_udf, _extract_partition
+from ..pipeline.job import _extract_partition, _size_gated
 from ..pipeline.schemas import EXTRACT_SCHEMA, PAGES_SCHEMA, RESULT_COLUMNS
 
 
@@ -72,17 +72,15 @@ def stream_extract_df(
     shape, different source).  ``source_format="warc"``: a directory of
     Common-Crawl-shaped ``.warc``/``.warc.gz`` archives, exploded to
     pages by ``sources.warc.read_warc_pages_stream`` — the
-    continuous-crawl ingest path.  Giant-doc routing is not split into
-    a second branch here: the micro-batch boundary itself bounds skew
+    continuous-crawl ingest path.  There is no giant-doc routing (and
+    no exchange) here: the micro-batch boundary itself bounds skew
     (small ``maxFilesPerTrigger`` keeps any one batch's giant count
     low).
 
     Batch/stream parity for the size gate: oversize documents are NOT
-    filtered away — they surface as blob-free ``skipped_too_large``
-    status rows, exactly like run_extraction's A2 branch (no silent row
-    drops; only the url string reaches Python for name derivation).
-    The union is stateless (two filters of one source), so it costs no
-    extra streaming query.
+    filtered away — the same ``_size_gated`` projection as
+    run_extraction nulls their blob, and the same kernel emits their
+    ``skipped_too_large`` status row (no silent row drops).
     """
     if source_format == "warc":
         from ..sources.warc import read_warc_pages_stream
@@ -96,31 +94,9 @@ def stream_extract_df(
                                    max_files_per_trigger)
         pages = reader.parquet(_as_stream_source(input_path))
 
-    sized = pages.select("url", "html").withColumn(
-        "_len", F.coalesce(F.length("html"), F.lit(0))
-    )
-    oversize = (
-        sized.filter(F.col("_len") > F.lit(max_bytes))
-        .select(
-            "url",
-            _doc_name_udf()("url").alias("doc_name"),
-            F.lit("unknown").alias("format"),
-            F.lit("skipped_too_large").alias("status"),
-            F.lit(None).cast("string").alias("error"),
-            F.lit(None).cast("string").alias("markdown"),
-            F.lit(None).cast("string").alias("md_sha256"),
-            F.lit(0).alias("n_images"),
-            F.lit("none").alias("extractor_used"),
-            F.lit(0).cast("long").alias("elapsed_us"),
-            F.col("_len").cast("long").alias("input_bytes"),
-        )
-    )
-    ok_sized = sized.filter(
-        F.col("_len") <= F.lit(max_bytes)
-    ).select("url", "html")
-    raw = ok_sized.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    docs = raw.filter(F.col("kind") == "doc").select(*RESULT_COLUMNS)
-    return docs.unionByName(oversize)
+    raw = _size_gated(pages, max_bytes).mapInPandas(
+        _extract_partition, schema=EXTRACT_SCHEMA)
+    return raw.filter(F.col("kind") == "doc").select(*RESULT_COLUMNS)
 
 
 def run_stream_extraction(

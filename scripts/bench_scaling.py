@@ -153,8 +153,8 @@ steady-state throughput with noisy-neighbor windows de-correlated).
   (`corpus.synth_pages_df`, seed 42, size_scale={report['size_scale']}: ~25KB median
   mixed HTML/PDF/DOCX/XLSX/image with long-tail sizes incl. multi-MB
   giant docs), materialized to parquet once, reused by every level.
-- Job: `run_extraction` — 100MB size gate -> giant-doc routing ->
-  url-hash repartition (3x cores) -> Arrow `mapInPandas` extract ->
+- Job: `run_extraction` — 100MB size gate -> one `repartitionById`
+  exchange (giant slots + url-hash, 3x cores) -> Arrow `mapInPandas` extract ->
   count of completed result rows (forces full execution).
 
 ## Primary pair: local[1] (N) -> local[4] (4N)
@@ -167,11 +167,14 @@ steady-state throughput with noisy-neighbor windows de-correlated).
 - **Speedup (4N vs N): {primary['speedup']}x** (ideal 4x)
 - **Scaling efficiency: {primary['efficiency']}** (target >= 0.8 -> {"PASS" if report['pass'] else "FAIL"})
 {sec_rows}
-Why the pipeline scales: the hot path has no shuffle after the single
-url-hash repartition — extraction is partition-parallel Arrow-batched
-Python with per-partition lineage trailers, and giant documents are
-routed to their own round-robin branch so no task inherits two of them
-(compute-skew control AQE cannot provide).  Reference single-thread
+Why the pipeline scales: the hot path is one scan and one exchange
+(`repartitionById`) with no shuffle after it — extraction is
+partition-parallel Arrow-batched Python with per-partition lineage
+trailers.  The exchange keeps url-hash placement for normal documents
+and gives giant documents the first `defaultParallelism` partitions,
+one slot per input split, so they launch in the first wave; giants
+read from the same split still share a task (compute-skew control AQE
+cannot provide).  Reference single-thread
 baseline is ~2.5-3.3 docs/s (`BASELINE.md`); every level above clears
 it by orders of magnitude per core.
 

@@ -74,11 +74,10 @@ def test_extraction_single_shuffle_and_pruning(spark):
         run_extraction(spark.read.parquet(pages_path), partitions=8).results,
         mode="simple",
     )
-    # One hash exchange (url repartition) on the normal branch, one
-    # round-robin on the giant branch — and nothing after the UDF.
-    assert plan.count("Exchange hashpartitioning(url") == 1, plan
-    # giant branch: round-robin (or SinglePartition when partitions//16==1)
-    assert plan.count("Exchange") == 2, plan
+    # One exchange places every row by id (url-hash slots and giant
+    # slots alike) — and nothing after the UDF.
+    assert plan.count("Exchange shufflepartitionidpassthrough") == 1, plan
+    assert plan.count("Exchange") == 1, plan
     # Only url+html leave the scan: text/lang/warc_ts pruned.
     assert "ReadSchema: struct<url:string,html:binary>" in plan, plan
 

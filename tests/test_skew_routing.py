@@ -1,12 +1,15 @@
-"""Giant-document skew routing: both branches produce identical bytes,
-the ledger covers both branches' partitions, and the giant branch's
-partitions come first (lowest partition ids, so they launch first).
+"""Giant-document skew routing: giants and normal docs produce identical
+bytes, the ledger covers every partition, and giants hold the lowest
+partition ids (so they launch first).
 
-The giant branch has ``max(1, partitions // 16)`` round-robin partitions:
-below 32 partitions every giant shares one task, and round-robin can put
-giants from different map tasks into the same slot, so it does not give
-each giant its own task (ROADMAP direction 5)."""
+One ``repartitionById`` exchange places every row: giants into the first
+``defaultParallelism`` slots by input split (giants from different
+splits never share a task; giants from one split do), everything else
+exactly where ``repartition(P, "url")`` would, shifted past those
+slots."""
 
+import contextlib
+import io
 import os
 import subprocess
 import sys
@@ -50,14 +53,18 @@ def test_oversize_docs_become_status_rows_not_drops(spark):
     row = skipped.first()
     assert row["markdown"] is None and row["input_bytes"] > 5000
     assert row["doc_name"]  # name derived from url without touching blob
+    assert (row["format"], row["extractor_used"]) == ("unknown", "none")
+    # Oversize rows ride the extract stage, so the ledger counts them.
+    assert plan.ledger.agg(F.sum("m_docs")).first()[0] == 50
     results.unpersist()
 
 
 def test_oversize_branch_survives_session_restart():
-    """The oversize branch's doc-name UDF is built per run_extraction call:
-    a module-level UDF keeps its Java side bound to the first
-    SparkContext, and after spark.stop() and a new session every task of
-    the stage logs "Failed to update accumulator".  Two sessions, one
+    """Oversize rows keep working across a session restart.  Their status
+    rows once came from a pandas UDF, and a module-level UDF keeps its
+    Java side bound to the first SparkContext: after spark.stop() and a
+    new session every task of the stage logged "Failed to update
+    accumulator".  The plan must hold no such object.  Two sessions, one
     after the other, in a child process (the shared test session stays
     up)."""
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
@@ -80,9 +87,9 @@ def test_giant_routing_byte_parity_and_ledger(spark):
     assert results.count() == 300
     assert results.select("url").distinct().count() == 300
 
-    # Ledger has one metrics row per partition of BOTH branches:
-    # 8 normal + max(1, 8//16) giant.
-    assert plan.ledger.count() == 9
+    # Ledger has one metrics row per partition, empty ones included:
+    # 8 url-hash partitions + one giant slot per default-parallelism core.
+    assert plan.ledger.count() == 8 + spark.sparkContext.defaultParallelism
     assert plan.ledger.agg(F.sum("m_docs")).first()[0] == 300
 
     # Giant-branch outputs are byte-identical to the standalone extractor
@@ -105,20 +112,90 @@ def test_giant_routing_byte_parity_and_ledger(spark):
     pages.unpersist()
 
 
+def _giant_ids(ledger):
+    """Ledger partition ids whose mean doc size reaches the threshold
+    (giants only), and the ids of the other non-empty partitions."""
+    rows = ledger.select("partition_id", "m_docs", "m_bytes").collect()
+    giant = [r["partition_id"] for r in rows
+             if r["m_docs"] and r["m_bytes"] >= r["m_docs"] * GIANT_THRESHOLD]
+    other = [r["partition_id"] for r in rows
+             if r["m_docs"] and r["partition_id"] not in giant]
+    return giant, other, {r["partition_id"]: r["m_docs"] for r in rows}
+
+
 def test_giant_partitions_come_first(spark):
-    """The giant branch is unioned first: the partitions that hold giants
-    get the smallest partition ids, and tasks launch in partition-id
-    order, so the longest tasks start in the first wave instead of
-    ending the stage."""
+    """The partitions that hold giants get the smallest partition ids,
+    and tasks launch in partition-id order, so the longest tasks start
+    in the first wave instead of ending the stage."""
     pages = synth_pages_df(spark, 300, giant_every=100)
     plan = run_extraction(pages, partitions=32,
                           giant_threshold=GIANT_THRESHOLD)
-    rows = plan.ledger.select("partition_id", "m_docs", "m_bytes").collect()
-    giant_ids = [r["partition_id"] for r in rows
-                 if r["m_docs"] and r["m_bytes"] >= r["m_docs"] * GIANT_THRESHOLD]
-    other_ids = [r["partition_id"] for r in rows
-                 if r["m_docs"] and r["partition_id"] not in giant_ids]
+    giant_ids, other_ids, _ = _giant_ids(plan.ledger)
     assert giant_ids and other_ids
-    # 32 // 16 = 2 giant-branch partitions; ids 0 and 1 (one may be
-    # empty when round-robin puts every giant into the same slot).
-    assert max(giant_ids) < 2 <= min(other_ids)
+    # Giant slots are ids [0, defaultParallelism); url-hash ones follow.
+    slots = spark.sparkContext.defaultParallelism
+    assert max(giant_ids) < slots <= min(other_ids)
+
+
+def _giant_page(i: int) -> tuple:
+    html = ("<html><body>" + f"<p>giant {i} paragraph</p>" * 8000
+            + "</body></html>").encode()
+    assert len(html) >= GIANT_THRESHOLD
+    return (f"https://giant.example.com/{i}", None, html, None, "en")
+
+
+def test_giants_from_two_splits_get_a_task_each(spark, tmp_path):
+    """Two giants read from two parquet files (two input splits) land in
+    two different partitions, each alone, below every url-hash
+    partition."""
+    from document_convert_to__markdown_spark.pipeline.schemas import (
+        PAGES_SCHEMA,
+    )
+
+    dirs = []
+    for k in range(2):
+        normal = synth_pages_df(spark, 40, giant_every=0, partitions=1) \
+            .withColumn("url", F.concat(F.lit(f"f{k}-"), "url"))
+        giant = spark.createDataFrame([_giant_page(k)], PAGES_SCHEMA)
+        dirs.append(str(tmp_path / f"part{k}"))
+        normal.unionByName(giant).coalesce(1).write.parquet(dirs[-1])
+    pages = spark.read.parquet(*dirs)
+    assert pages.rdd.getNumPartitions() == 2
+
+    plan = run_extraction(pages, partitions=8,
+                          giant_threshold=GIANT_THRESHOLD)
+    giant_ids, other_ids, docs = _giant_ids(plan.ledger)
+    assert len(giant_ids) == 2
+    assert all(docs[i] == 1 for i in giant_ids)
+    assert max(giant_ids) < min(other_ids)
+    assert sum(docs.values()) == 82
+
+
+def test_normal_docs_keep_url_hash_placement(spark):
+    """Every url-hash partition holds exactly the urls that
+    repartition(P, "url") puts in the same partition: the giant slots
+    shift the ids but do not move a row."""
+    pages = synth_pages_df(spark, 200, giant_every=0)
+    slots = spark.sparkContext.defaultParallelism
+    got = (run_extraction(pages, partitions=8).results
+           .select("url", (F.spark_partition_id() - slots).alias("p")))
+    want = (pages.repartition(8, "url")
+            .select("url", F.spark_partition_id().alias("p")))
+    assert got.count() == 200
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_one_scan_one_exchange_no_python_udf(spark, tmp_path):
+    """The extract plan scans the pages once and shuffles them once; no
+    scalar Python UDF runs beside the mapInPandas stage."""
+    path = str(tmp_path / "pages")
+    synth_pages_df(spark, 20, partitions=2).write.parquet(path)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        run_extraction(spark.read.parquet(path)).raw.explain()
+    plan = buf.getvalue()
+    assert plan.count("Exchange ") == 1, plan
+    assert "Exchange shufflepartitionidpassthrough" in plan, plan
+    assert plan.count("FileScan ") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
